@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.pipeline.{CurationJob, DocGen}
+import graft.pipeline.{CurationJob, DocGen, Json}
 
 /** The curation-chain `spark-submit` entry point — the one-command
   * artifact a real user runs over a documents corpus (the curation mirror
@@ -128,14 +128,14 @@ object RunCuration {
       testId = CurationJob.inputIdentity(spark, opts.getOrElse("test", "")))
     val sec = (System.nanoTime() - t0) / 1e9
 
-    val stageJson = stages.map(s =>
-      s"""{"stage":"${CurationJob.esc(s.stage)}","rows":${s.rows},""" +
-        s""""resumed":${s.resumed},"sec":${f"${s.sec}%.2f"}}""")
-      .mkString("[", ",", "]")
-    println(
-      s"""{"job":"graft-curation","runId":"${CurationJob.esc(runId)}",""" +
-        s""""input":"${CurationJob.esc(input)}","stages":$stageJson,""" +
-        s""""sec":${f"$sec%.2f"}}""")
+    println(Json.encode(Summary(runId = runId, input = input,
+      stages = stages.map(s => s.copy(sec = Json.centis(s.sec))),
+      sec = Json.centis(sec))))
     spark.stop()
   }
+
+  /** The run's one-line JSON summary on stdout: per-stage lineage. */
+  final case class Summary(
+      job: String = "graft-curation", runId: String, input: String,
+      stages: Seq[CurationJob.StageResult], sec: Double)
 }

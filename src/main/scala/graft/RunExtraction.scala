@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.pipeline.{Checkpoint, TranscriptGen}
+import graft.pipeline.{Checkpoint, Json, TranscriptGen}
 import graft.schema.Turn
 
 /** The production `spark-submit` entry point (north rule: "run via
@@ -73,13 +73,16 @@ object RunExtraction {
       configHash = configHash, ttlMs = ttlMs)
     val sec = (System.nanoTime() - t0) / 1e9
 
-    val rows = committed.map(_.rows).sum
-    val bytes = committed.map(_.bytes).sum
-    println(
-      s"""{"job":"graft-extraction","runId":"$runId","input":"$input",""" +
-        s""""buckets":$buckets,"resumed_buckets":$preDone,""" +
-        s""""committed_buckets":${committed.size},"rows":$rows,"bytes":$bytes,""" +
-        s""""sec":${f"$sec%.2f"}}""")
+    println(Json.encode(Summary(runId = runId, input = input,
+      buckets = buckets, resumed_buckets = preDone,
+      committed_buckets = committed.size, rows = committed.map(_.rows).sum,
+      bytes = committed.map(_.bytes).sum, sec = Json.centis(sec))))
     spark.stop()
   }
+
+  /** The run's one-line JSON summary on stdout. */
+  final case class Summary(
+      job: String = "graft-extraction", runId: String, input: String,
+      buckets: Int, resumed_buckets: Int, committed_buckets: Int,
+      rows: Long, bytes: Long, sec: Double)
 }

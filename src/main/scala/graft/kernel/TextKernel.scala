@@ -49,6 +49,9 @@ final class TextKernel {
     "funcao" -> "função", "decisao" -> "decisão", "opcao" -> "opção",
     "situacao" -> "situação", "condicao" -> "condição")
   private val ocrCorrectionsMap: Map[String, String] = ocrCorrections.toMap
+  // correctSpelling's fast path relies on this (see its comment)
+  require(!ocrCorrections.exists(_._1.exists(TextKernel.asciiFoldTargets)),
+    "a correction key holds a char lowercasing reaches from non-ASCII")
   // spelling fast-path key table: keys bucketed by length for in-place
   // comparison against the folded word buffer (compared EXACTLY, like the
   // map lookup — uppercase-bearing keys are as unreachable there as here,
@@ -367,7 +370,9 @@ final class TextKernel {
     // ASCII spaces (the normal state after cleanText) AND (b) no word's
     // stripNonWord(lower(word)) equals a correction key. (b) is proven by
     // folding each word's ASCII chars in place against the key table
-    // (keys are pure ASCII, so a word containing any non-ASCII WORD char
+    // (keys are pure ASCII and, asserted at construction, hold no char
+    // that ROOT lowercasing reaches from non-ASCII — today 'k', from
+    // U+212A KELVIN SIGN — so a word containing any non-ASCII WORD char
     // can never match; non-ASCII caseless non-word chars are exactly what
     // stripNonWord removes). Constructs the proof can't cover cheaply —
     // a cased non-ASCII non-word char, whose lowercase form the slow path
@@ -477,24 +482,25 @@ final class TextKernel {
     // regex contains a mandatory contiguous \d{n} group, so a text whose
     // longest digit run is shorter provably has no match — a stronger
     // necessary condition than hasDigit that skips the regex scan for
-    // most short-number text (\d and isDigit are both Unicode Nd)
+    // most short-number text (\d and isDigit are both Unicode Nd, by
+    // code point: astral digits such as U+1D7D8 are surrogate pairs)
     var digitRun = 0
     var maxDigitRun = 0
     var digitCount = 0
     var i = 0
     while (i < text0.length) {
-      val c = text0.charAt(i)
-      if (Character.isDigit(c)) {
+      val cp = text0.codePointAt(i)
+      if (Character.isDigit(cp)) {
         hasDigit = true
         digitCount += 1
         digitRun += 1
         if (digitRun > maxDigitRun) maxDigitRun = digitRun
       } else {
         digitRun = 0
-        if (c == ':') hasColon = true
-        else if (c == '@') hasAt = true
+        if (cp == ':') hasColon = true
+        else if (cp == '@') hasAt = true
       }
-      i += 1
+      i += Character.charCount(cp)
     }
     val hasCurrency = hasDigit && text0.contains("R$")
     val hasHttp = hasColon && text0.contains("http")
@@ -520,14 +526,15 @@ final class TextKernel {
       var k = 0
       var j = 0
       var prevDigit = false
-      while (j < text.length) {
-        val d = Character.isDigit(text.charAt(j))
+      while (j < text.length) { // by code point, like the scan above
+        val cp = text.codePointAt(j)
+        val d = Character.isDigit(cp)
         if (d && !prevDigit) {
           if (k == cap) { cap *= 2; rs = java.util.Arrays.copyOf(rs, cap) }
           rs(k) = j; k += 1
         }
         prevDigit = d
-        j += 1
+        j += Character.charCount(cp)
       }
       runStarts = rs; nRuns = k
     }
@@ -1016,6 +1023,19 @@ final class TextKernel {
     val total = correctionFactor + patternFactor + lengthFactor
     math.max(0.0, math.min(0.30, total))
   }
+}
+
+object TextKernel {
+
+  /** ASCII chars that [[Py.lower]] yields from a non-ASCII code point
+    * whose lowercase is pure ASCII — today only 'k' (U+212A KELVIN SIGN).
+    * String lowercasing's special cases (U+0130) pass the filter too.
+    */
+  private[kernel] val asciiFoldTargets: Set[Char] =
+    (0x80 to Character.MAX_CODE_POINT).iterator
+      .filter(cp => Character.toLowerCase(cp) != cp)
+      .map(cp => Py.lower(new String(Character.toChars(cp))))
+      .filter(_.forall(_ < 128)).flatMap(_.iterator).toSet
 }
 
 /** Brazilian-document validators (text_processor.py:513-641). */

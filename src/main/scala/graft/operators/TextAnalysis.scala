@@ -40,9 +40,6 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "las", "una", "pero", "como", "más"),
     "de" -> Seq("der", "die", "das", "und", "nicht", "ein", "ist", "mit"))
 
-  def markerHits(text: Column, words: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isin(words: _*)))
-
   /** n-gram/stopword language-ID heuristic: argmax of marker hits with a
     * minimum-evidence threshold of 2, ties broken by inventory order;
     * otherwise "und". Mirrors the reference's language handling being a

@@ -56,31 +56,11 @@ object Checkpoint {
 
   private def dataDir(outDir: String): String = s"$outDir/data"
 
-  def writeManifest(outDir: String, m: Manifest): Unit = {
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val json =
-      s"""{"partId":${m.partId},"rows":${m.rows},"bytes":${m.bytes},""" +
-        s""""runId":"${esc(m.runId)}","committedAtEpochMs":${m.committedAtEpochMs},""" +
-        s""""lineage":"${esc(m.lineage)}","configHash":"${esc(m.configHash)}",""" +
-        s""""numBuckets":${m.numBuckets}}"""
-    Fs.writeAtomic(manifestPath(outDir, m.partId), json)
-  }
+  def writeManifest(outDir: String, m: Manifest): Unit =
+    Json.write(manifestPath(outDir, m.partId), m)
 
-  def readManifest(outDir: String, partId: Int): Option[Manifest] = {
-    Fs.readString(manifestPath(outDir, partId)).map { s =>
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(s)
-      def l(f: String): Long = (j \ f) match {
-        case JInt(i) => i.toLong; case JLong(i) => i; case _ => 0L
-      }
-      def str(f: String): String = (j \ f) match {
-        case JString(v) => v; case _ => ""
-      }
-      Manifest(l("partId").toInt, l("rows"), l("bytes"), str("runId"),
-        l("committedAtEpochMs"), str("lineage"), str("configHash"),
-        l("numBuckets").toInt)
-    }
-  }
+  def readManifest(outDir: String, partId: Int): Option[Manifest] =
+    Json.read[Manifest](manifestPath(outDir, partId))
 
   /** Fail loudly when a committed manifest was written under a different
     * bucket count: the placement mod changed, so "resume" would silently

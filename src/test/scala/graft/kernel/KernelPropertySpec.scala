@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KernelPropertySpec extends AnyFunSuite {
 
+  // U+1D7D8 MATHEMATICAL DOUBLE-STRUCK DIGIT ZERO: an astral Nd digit
+  private val Astral = new String(Character.toChars(0x1D7D8))
+
   // mixes plain words, OCR-confusable tokens, pattern-shaped fragments,
   // control chars, unicode, long runs
   private val fragment: Gen[String] = Gen.oneOf(
@@ -21,7 +24,11 @@ class KernelPropertySpec extends AnyFunSuite {
     Gen.oneOf("rn", "cl", "0", "O", "l", "1", "S", "5", "nao", "dr", "sr"),
     Gen.oneOf("123.456.789-09", "11.222.333/0001-81", "01/02/2023", "25:99",
       "x@y.zw", "R$ 1.500,00", "http://a.b", "(11) 98765-4321"),
-    Gen.oneOf(" ", "", "​", " ", "ação", "ÀÉÎÕÜ", "日本語", "🙂"),
+    // astral Nd digits (U+1D7D8…, surrogate pairs) alone and mixed with
+    // BMP digits: regex \d matches them as single code points
+    Gen.oneOf(s"${Astral * 5}-${Astral * 3}", s"1${Astral}3.4${Astral}6.789-0$Astral",
+      s"12:${Astral * 2}", s"($Astral$Astral) 98765-4${Astral}21"),
+    Gen.oneOf(" ", "", "​", " ", "ação", "ÀÉÎÕÜ", "日本語", "🙂", "\u212Aelvin"),
     Gen.listOfN(5, Gen.oneOf("\n", "\n\n", "\t", " ", "  ")).map(_.mkString),
     Gen.const("a" * 600))
 
@@ -158,10 +165,10 @@ class KernelPropertySpec extends AnyFunSuite {
       val rs = scala.collection.mutable.ArrayBuffer.empty[Int]
       var prev = false
       var i = 0
-      while (i < t.length) {
-        val d = Character.isDigit(t.charAt(i))
+      while (i < t.length) { // by code point: \d matches astral digits
+        val d = Character.isDigit(t.codePointAt(i))
         if (d && !prev) rs += i
-        prev = d; i += 1
+        prev = d; i += Character.charCount(t.codePointAt(i))
       }
       (rs.toArray, rs.length)
     }
@@ -173,7 +180,8 @@ class KernelPropertySpec extends AnyFunSuite {
       "٣٤٥ ١٢:٣٤ unicode digits", "1٢3 mixed-digit run",
       "00000000000", "000.000.000-00", "end digits 123", "123 start digits",
       "dots.1.2.3.4.5 colons:1:2:3", "(((((((", "()()() (1) (12)3456-7890",
-      "12:34", "1:23", ":123:", "x:12:34:x")
+      "12:34", "1:23", ":123:", "x:12:34:x",
+      s"12345-678 ${Astral * 5}-${Astral * 3}", s"$Astral${Astral}1:${Astral}2")
     (adversarial ++ corpus).foreach { t =>
       val (rs, k) = runs(t)
       table.foreach { case (p, paren) =>
@@ -181,6 +189,26 @@ class KernelPropertySpec extends AnyFunSuite {
           s"anchored findAll diverged for ${p.pattern} on: ${t.take(80)}")
       }
     }
+  }
+
+  test("astral Nd digits reach the pattern stage like BMP digits") {
+    val kernel = new TextKernel
+    val astralCep = s"${Astral * 5}-${Astral * 3}"
+    // both CEPs: the feasibility scan and the anchors count code points
+    val mixed = s"12345-678 $astralCep"
+    assert(kernel.detectAndFormatPatterns(mixed)._2.get("cep").map(_.toList)
+      .contains(List("12345-678", astralCep)))
+    // astral digits alone must pass the digit-count feasibility gate
+    assert(kernel.detectAndFormatPatterns(astralCep)._2.get("cep").map(_.toList)
+      .contains(List(astralCep)))
+  }
+
+  test("spelling keys hold no char that lowercasing reaches from non-ASCII") {
+    // U+212A KELVIN SIGN lowercases to ASCII 'k'; the construction-time
+    // assertion keeps every correction key free of such chars
+    assert(TextKernel.asciiFoldTargets == Set('k'))
+    val kernel = new TextKernel
+    assert(kernel.correctSpelling("\u212Am rn") == (("\u212Am m", 1)))
   }
 
   test("abbreviation match scanner and bounded replace match the regex engine") {
