@@ -97,9 +97,11 @@ object CurationJob {
 
   /** Content-sensitive identity of an input path for resume keying: the
     * order-independent combination of every file's (path, length,
-    * mtime). Appending/replacing files under the same --input path
-    * therefore INVALIDATES stage 1 (and downstream) on the next run —
-    * resume never silently serves a curation of yesterday's listing.
+    * mtime), listed by [[Fs.fileStatuses]] under the active session's
+    * Hadoop configuration. Appending/replacing files under the same
+    * --input path therefore INVALIDATES stage 1 (and downstream) on the
+    * next run — resume never silently serves a curation of yesterday's
+    * listing.
     * Non-path inputs (synth:N) are identified by their descriptor, which
     * fully determines their content.
     *
@@ -112,18 +114,12 @@ object CurationJob {
   def inputIdentity(spark: SparkSession, input: String): String = {
     if (input.isEmpty || !input.contains("/")) return input
     try {
-      val p = new org.apache.hadoop.fs.Path(input)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var acc = 0L
-      var n = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        acc ^= TranscriptGen.sm64(f.getPath.toString.hashCode.toLong ^
+      val files = Fs.fileStatuses(input)
+      val acc = files.foldLeft(0L) { (acc, f) =>
+        acc ^ TranscriptGen.sm64(f.getPath.toString.hashCode.toLong ^
           (f.getLen * 0x9E3779B97F4A7C15L) ^ f.getModificationTime)
-        n += 1
       }
-      s"$input@n=$n,h=${java.lang.Long.toHexString(acc)}"
+      s"$input@n=${files.size},h=${java.lang.Long.toHexString(acc)}"
     } catch {
       case scala.util.control.NonFatal(e) =>
         throw new java.io.IOException(

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.Path
 import java.time.{DayOfWeek, Instant, ZonedDateTime, ZoneId, ZoneOffset}
 import java.time.temporal.TemporalAdjusters
+
+import graft.pipeline.Json
 
 /** Interval/daily/weekly job scheduling — the engine-shaped analog of the
   * reference's automation scheduler (/root/reference/src/automation/
@@ -16,9 +17,10 @@ import java.time.temporal.TemporalAdjusters
   *     the Spark analog of the reference's "process the watched folder
   *     now") or a [[graft.pipeline.CurationJob]] resume (idempotent by
   *     construction, so an extra tick is harmless);
-  *   - the RUNNER owns only last-run state, persisted as JSON via atomic
-  *     rename, so a restarted scheduler resumes where it left off (the
-  *     reference keeps next_execution in its config store,
+  *   - the RUNNER owns only last-run state, a JSON object of job name →
+  *     epoch ms committed through [[graft.pipeline.Json]] (tmp file +
+  *     atomic rename), so a restarted scheduler resumes where it left off
+  *     (the reference keeps next_execution in its config store,
   *     scheduler.py:95-116).
   *
   * Catch-up semantics mirror the reference: when several periods elapsed
@@ -79,17 +81,12 @@ object Scheduler {
   final class Runner(
       jobs: Seq[Job], startMs: Long, stateFile: Option[Path] = None) {
     require(jobs.map(_.name).distinct.size == jobs.size, "job names must be unique")
-    // names are persisted as raw JSON keys — constrain instead of escaping
-    require(jobs.forall(_.name.matches("[A-Za-z0-9._-]+")),
-      "job names must match [A-Za-z0-9._-]+ (they key the persisted state)")
 
+    // the state file is a local path, so it is addressed as file:// even
+    // when the active session's default filesystem is not local
+    private val statePath = stateFile.map(_.toUri.toString)
     private val lastRun = scala.collection.mutable.Map.empty[String, Long]
-    stateFile.filter(Files.exists(_)).foreach { p =>
-      val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(s).foreach { m =>
-        lastRun(m.group(1)) = m.group(2).toLong
-      }
-    }
+    statePath.flatMap(Json.read[Map[String, Long]](_)).foreach(lastRun ++= _)
 
     private def anchor(j: Job): Long = lastRun.getOrElse(j.name, startMs)
 
@@ -134,16 +131,8 @@ object Scheduler {
       ran.toSeq
     }
 
-    private def persist(): Unit = stateFile.foreach { p =>
-      if (p.getParent != null) Files.createDirectories(p.getParent)
-      val json = lastRun.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}")
-      val tmp = p.resolveSibling("." + p.getFileName.toString + ".tmp")
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    private def persist(): Unit =
+      statePath.foreach(Json.write(_, scala.collection.immutable.TreeMap.from(lastRun)))
 
     /** Production convenience loop (scheduler.py:437-466's
       * check-every-minute thread, minus the thread — callers own the

@@ -112,4 +112,34 @@ class SchedulerSpec extends AnyFunSuite {
     (1 to 5).foreach(k => r.runPending(t0 + k * 30 * Min))
     assert(drains == 5)
   }
+
+  test("a state file in the earlier hand-written format reads back") {
+    // graft/scheduler/state.json is byte for byte what the earlier writer
+    // produced: sorted raw keys, no spaces, no checksum sidecar
+    val in = getClass.getResourceAsStream("/graft/scheduler/state.json")
+    val fixture = try in.readAllBytes() finally in.close()
+    val state = Files.createTempDirectory("graft-sched-fixture").resolve("state.json")
+    Files.write(state, fixture)
+    val drain = Job("drain", Interval(10 * Min), () => ())
+    val curation = Job("curation", Interval(10 * Min), () => ())
+    def mk() = new Runner(Seq(drain, curation), startMs = t0, stateFile = Some(state))
+    val r = mk()
+    assert(r.nextDue(drain) == t0 + 11 * Min)
+    assert(r.nextDue(curation) == t0 + 12 * Min)
+    assert(r.runPending(t0 + 11 * Min) == Seq("drain"))
+    // the codec writes the same shape back
+    assert(new String(Files.readAllBytes(state), "UTF-8") ==
+      s"""{"curation":${t0 + 2 * Min},"drain":${t0 + 11 * Min}}""")
+    assert(mk().nextDue(drain) == t0 + 21 * Min)
+  }
+
+  test("any job name round-trips through the persisted state") {
+    val state = Files.createTempDirectory("graft-sched-names").resolve("state.json")
+    val names = Seq("nightly curation", "q\"uote", "tab\tnew\nline", "été/日本")
+    val jobs = names.map(Job(_, Interval(10 * Min), () => ()))
+    def mk() = new Runner(jobs, startMs = t0, stateFile = Some(state))
+    assert(mk().runPending(t0 + 10 * Min) == names)
+    val r = mk()
+    jobs.foreach(j => assert(r.nextDue(j) == t0 + 20 * Min, j.name))
+  }
 }
